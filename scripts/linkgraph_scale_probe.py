@@ -1,21 +1,17 @@
-"""Scale probe for the link-graph + cluster-dedup operators: a
-power-law host graph (the real web's shape — a few hub hosts receive a
-large share of all edges) through `pagerank`, and a planted
-duplicate-family pair set through `connected_components`, with wall
-times and per-iteration throughput.
+"""Scale probe for the link-graph operator: a power-law host graph (the
+real web's shape — a few hub hosts receive a large share of all edges)
+through `pagerank`, with wall time and per-iteration throughput.
 
 The skew matters: a uniform random graph would never exercise the
-hot-key paths the operators' docstrings argue about.  Here host ids
+hot-key paths the operator's docstring argues about.  Here host ids
 are drawn zipf(1.5), so the top destination receives ~5-10% of ALL
-edges (a reducer-skew landmine for any non-combinable plan), and the
-component families include both near-cliques (LSH-bucket shape) and a
-long chain (worst-case hash-min diameter).
+edges (a reducer-skew landmine for any non-combinable plan).
 
-Usage: python scripts/linkgraph_scale_probe.py [n_edges] [n_hosts] [cpus] [n_fam]
+Usage: python scripts/linkgraph_scale_probe.py [n_edges] [n_hosts] [cpus]
 Writes BENCH/linkgraph_probe_<n_edges>_c<cpus>.json and prints it.
 
 Weak-scaling evidence (the north rule's two-cluster-size criterion
-applied to the graph ops): run the probe at (N edges, c cores) and
+applied to the graph op): run the probe at (N edges, c cores) and
 (4N edges, 4c cores) — constant wall time = efficiency 1.0; the pair
 of JSONs carries both walls.
 """
@@ -34,11 +30,9 @@ def main() -> None:
     n_edges = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     n_hosts = int(sys.argv[2]) if len(sys.argv) > 2 else 200_000
     cpus = int(sys.argv[3]) if len(sys.argv) > 3 else 32
-    n_fam_arg = int(sys.argv[4]) if len(sys.argv) > 4 else 150_000
 
     from pyspark.sql import functions as F
 
-    from whoosh_novo_spark.operators.components import connected_components
     from whoosh_novo_spark.operators.linkgraph import pagerank
     from whoosh_novo_spark.session import get_spark
 
@@ -79,34 +73,6 @@ def main() -> None:
     top = pr.orderBy(F.desc("rank")).limit(3).collect()
     pr_wall = time.time() - t0
 
-    # --- planted duplicate families for connected components ----------
-    # 150k 4-node stars (LSH-bucket shape, diameter 2) + one 16-node
-    # chain (multi-round worst case; hash-min rounds = max diameter, so
-    # the chain, not the stars, sets the iteration count)
-    n_fam = n_fam_arg
-    star = (
-        spark.range(n_fam * 3)
-        .select(
-            F.concat(F.lit("d"), (F.col("id") / 3).cast("long") * 4 + 0).alias("a"),
-            F.concat(
-                F.lit("d"), (F.col("id") / 3).cast("long") * 4 + F.col("id") % 3 + 1
-            ).alias("b"),
-        )
-    )
-    chain_base = n_fam * 4
-    chain = spark.range(15).select(
-        F.concat(F.lit("c"), F.col("id") + chain_base).alias("a"),
-        F.concat(F.lit("c"), F.col("id") + chain_base + 1).alias("b"),
-    )
-    pairs = star.unionByName(chain).persist()
-    n_pairs = pairs.count()
-
-    t1 = time.time()
-    comp = connected_components(pairs, max_iter=60)
-    n_components = comp.select("component").distinct().count()
-    n_nodes = comp.count()
-    cc_wall = time.time() - t1
-
     out = {
         "n_edges": m,
         "n_hosts": n_hosts,
@@ -116,12 +82,6 @@ def main() -> None:
         "pagerank_wall_sec": round(pr_wall, 1),
         "pagerank_edges_per_sec_per_iter": int(m * 10 / pr_wall),
         "pagerank_top3": [(r["node"], round(r["rank"], 6)) for r in top],
-        "cc_pairs": n_pairs,
-        "cc_nodes": n_nodes,
-        "cc_components": n_components,
-        "cc_expected_components": n_fam + 1,
-        "cc_wall_sec": round(cc_wall, 1),
-        "cc_pairs_per_sec": int(n_pairs / cc_wall),
         "loadavg_start": round(load0, 2),
     }
     path = f"BENCH/linkgraph_probe_{n_edges}_c{cpus}.json"

@@ -1,19 +1,22 @@
-"""Distributed full-data quantizer training (operators/ann_train.py):
-iteration-exact parity with a numpy oracle over the full collected data,
-partitioning invariance, and the motivating gate — when the bounded
-prefix sample is BIASED (misses clusters), full-data training produces
-a strictly better quantizer than the sampled trainer."""
+"""Full-data quantizer training: the trainers in operators/similarity.py
+read the first ``sample`` rows by id, so a ``sample`` that covers the
+table trains on every row.  Checked here: iteration-exact parity with a
+numpy oracle over the whole data, partitioning invariance, and the
+reason to train on everything — when the bounded prefix sample is
+BIASED (misses clusters), full-data training gives a strictly better
+quantizer, and better served recall, than the prefix sample."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from whoosh_novo_spark.operators.ann_train import (
-    train_ivf_centroids_full,
-    train_pq_codebooks_full,
+from whoosh_novo_spark.operators.similarity import (
+    _unit_rows,
+    train_ivf_centroids,
+    train_pq_codebooks,
+    train_pq_codebooks_residual,
 )
-from whoosh_novo_spark.operators.similarity import _unit_rows
 
 
 def _make_clusters(n_clusters: int, per: int, dim: int, seed: int, spread=0.25):
@@ -29,12 +32,22 @@ def _make_clusters(n_clusters: int, per: int, dim: int, seed: int, spread=0.25):
     return rows  # (cluster, unit vector)
 
 
+def _sorted_by_cluster_df(spark, raw):
+    rows = [
+        (i, [float(x) for x in v])
+        for i, (c, v) in enumerate(sorted(raw, key=lambda t: t[0]))
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    ).repartition(6).cache()
+    df.count()
+    return df, rows
+
+
 @pytest.fixture(scope="module")
 def interleaved(spark):
-    """3000 vectors over 12 clusters, ids INTERLEAVED across clusters so
-    the init prefix is representative."""
+    """3000 vectors over 12 clusters, ids INTERLEAVED across clusters."""
     raw = _make_clusters(12, 250, 32, seed=7)
-    # interleave: id i takes cluster i % 12
     by_c: dict[int, list] = {}
     for c, v in raw:
         by_c.setdefault(c, []).append(v)
@@ -51,8 +64,8 @@ def interleaved(spark):
     return df, X
 
 
-def _numpy_ivf(X, X0, k, iters):
-    C = X0[np.linspace(0, len(X0) - 1, k).astype(int)].copy()
+def _numpy_ivf(X, k, iters):
+    C = X[np.linspace(0, len(X) - 1, k).astype(int)].copy()
     for _ in range(iters):
         a = np.argmax(np.round(X @ C.T, 9), axis=1)
         for j in range(k):
@@ -65,11 +78,9 @@ def _numpy_ivf(X, X0, k, iters):
 
 def test_ivf_full_matches_numpy(spark, interleaved):
     df, X = interleaved
-    k, iters, init = 8, 4, 512
-    got = train_ivf_centroids_full(
-        df, n_centroids=k, iters=iters, init_sample=init
-    )
-    want = _numpy_ivf(X, X[:init], k, iters)
+    k, iters = 8, 4
+    got = train_ivf_centroids(df, n_centroids=k, iters=iters, sample=len(X))
+    want = _numpy_ivf(X, k, iters)
     assert np.allclose(got, want, atol=1e-9)
     # final assignments identical too
     assert (
@@ -79,85 +90,63 @@ def test_ivf_full_matches_numpy(spark, interleaved):
 
 
 def test_ivf_full_partition_invariance(spark, interleaved):
-    df, _ = interleaved
-    a = train_ivf_centroids_full(
-        df.repartition(3), n_centroids=6, iters=3, init_sample=400
+    df, X = interleaved
+    a = train_ivf_centroids(
+        df.repartition(3), n_centroids=6, iters=3, sample=len(X)
     )
-    b = train_ivf_centroids_full(
-        df.repartition(11), n_centroids=6, iters=3, init_sample=400
+    b = train_ivf_centroids(
+        df.repartition(11), n_centroids=6, iters=3, sample=len(X)
     )
     assert np.allclose(a, b, atol=1e-12)
 
 
-def _numpy_pq(X, X0, m, n_codes, iters, C=None):
+def _numpy_pq(X, m, n_codes, iters, C=None):
     if C is not None:
         X = X - C[np.argmax(np.round(X @ C.T, 9), axis=1)]
-        X0 = X0 - C[np.argmax(np.round(X0 @ C.T, 9), axis=1)]
-    dim = X.shape[1]
-    dsub = dim // m
-    k = min(n_codes, len(X0))
+    dsub = X.shape[1] // m
+    k = min(n_codes, len(X))
     books = np.empty((m, k, dsub))
     for s in range(m):
-        books[s] = X0[:, s * dsub : (s + 1) * dsub][
-            np.linspace(0, len(X0) - 1, k).astype(int)
-        ]
-    for _ in range(iters):
-        for s in range(m):
-            Xs = X[:, s * dsub : (s + 1) * dsub]
-            Cb = books[s]
-            d2 = (
-                (Xs**2).sum(axis=1)[:, None]
-                - 2.0 * (Xs @ Cb.T)
-                + (Cb**2).sum(axis=1)[None, :]
-            )
+        Xs = X[:, s * dsub : (s + 1) * dsub]
+        Cb = Xs[np.linspace(0, len(X) - 1, k).astype(int)].copy()
+        for _ in range(iters):
+            d2 = ((Xs[:, None, :] - Cb[None, :, :]) ** 2).sum(axis=2)
             aa = np.argmin(np.round(d2, 9), axis=1)
             for j in range(k):
                 members = Xs[aa == j]
                 if len(members):
-                    books[s][j] = members.mean(axis=0)
+                    Cb[j] = members.mean(axis=0)
+        books[s] = Cb
     return books
 
 
 def test_pq_full_matches_numpy_raw_and_residual(spark, interleaved):
     df, X = interleaved
-    m, n_codes, iters, init = 4, 16, 3, 512
-    got = train_pq_codebooks_full(
-        df, m=m, n_codes=n_codes, iters=iters, init_sample=init
-    )
-    want = _numpy_pq(X, X[:init], m, n_codes, iters)
+    m, n_codes, iters = 4, 16, 3
+    got = train_pq_codebooks(df, m=m, n_codes=n_codes, iters=iters, sample=len(X))
+    want = _numpy_pq(X, m, n_codes, iters)
     assert np.allclose(got, want, atol=1e-9)
 
-    C = _numpy_ivf(X, X[:init], 6, 3)
-    got_r = train_pq_codebooks_full(
-        df, m=m, n_codes=n_codes, iters=iters, centroids=C, init_sample=init
+    C = _numpy_ivf(X, 6, 3)
+    got_r = train_pq_codebooks_residual(
+        df, C, m=m, n_codes=n_codes, iters=iters, sample=len(X)
     )
-    want_r = _numpy_pq(X, X[:init], m, n_codes, iters, C=C)
+    want_r = _numpy_pq(X, m, n_codes, iters, C=C)
     assert np.allclose(got_r, want_r, atol=1e-9)
 
 
 def test_full_training_recovers_clusters_a_biased_sample_misses(spark):
-    """The ids order ALL of clusters 0-1 first, so the sampled trainer's
-    prefix sample never sees clusters 2-11; full-data iterations migrate
-    the centroids out and win on the whole-corpus quantization objective
-    (mean max-cosine to a centroid) by a clear margin."""
-    from whoosh_novo_spark.operators.similarity import train_ivf_centroids
-
+    """The ids order ALL of clusters 0-1 first, so a 500-row prefix
+    sample never sees clusters 2-11; training on every row places a
+    centroid in each cluster and wins on the whole-corpus quantization
+    objective (mean max-cosine to a centroid) by a clear margin."""
     raw = _make_clusters(12, 250, 32, seed=11)
-    rows = [
-        (i, [float(x) for x in v])
-        for i, (c, v) in enumerate(sorted(raw, key=lambda t: t[0]))
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    ).repartition(6).cache()
-    df.count()
+    df, rows = _sorted_by_cluster_df(spark, raw)
     X = _unit_rows(np.asarray([v for _, v in rows], dtype=np.float64))
 
-    k, iters, init = 12, 8, 500  # sample = clusters 0-1 only
-    C_sampled = train_ivf_centroids(df, n_centroids=k, iters=iters, sample=init)
-    C_full = train_ivf_centroids_full(
-        df, n_centroids=k, iters=iters, init_sample=init
-    )
+    k, iters = 12, 8
+    C_sampled = train_ivf_centroids(df, n_centroids=k, iters=iters, sample=500)
+    C_full = train_ivf_centroids(df, n_centroids=k, iters=iters, sample=len(rows))
     obj_sampled = np.max(X @ C_sampled.T, axis=1).mean()
     obj_full = np.max(X @ C_full.T, axis=1).mean()
     assert obj_full > obj_sampled + 0.02, (obj_full, obj_sampled)
@@ -167,31 +156,21 @@ def test_full_training_recovers_clusters_a_biased_sample_misses(spark):
 
 
 def test_full_trained_quantizers_serve_ivf_pq(spark):
-    """End-to-end compose: full-data-trained centroids + RESIDUAL
-    codebooks drive the whole serving stack (ivf_pq_index residual=True
-    -> ivf_pq_topk ADC + re-rank) at recall@10 >= 0.9 — and on the same
-    BIASED-prefix corpus as the objective test, full-data training
-    beats the sampled trainers on served recall, not just on the
-    quantization objective."""
+    """End-to-end compose: full-data centroids + RESIDUAL codebooks
+    drive the whole serving stack (ivf_pq_index residual=True ->
+    ivf_pq_topk ADC + re-rank) at recall@10 >= 0.9, and on a
+    BIASED-prefix corpus they beat prefix-sample training on served
+    recall, not just on the quantization objective."""
     from whoosh_novo_spark.operators.similarity import (
         cosine_topk,
         ivf_pq_index,
         ivf_pq_topk,
-        train_ivf_centroids,
-        train_pq_codebooks_residual,
     )
 
     raw = _make_clusters(12, 120, 32, seed=23)
-    rows = [
-        (i, [float(x) for x in v])
-        for i, (c, v) in enumerate(sorted(raw, key=lambda t: t[0]))
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    ).repartition(6).cache()
-    df.count()
+    df, rows = _sorted_by_cluster_df(spark, raw)
     vecs = [v for _, v in rows]
-    k_c, iters, init = 12, 8, 450  # prefix covers clusters 0-3 only
+    k_c, iters, prefix = 12, 8, 450  # the prefix covers clusters 0-3 only
 
     def served_recall(C, books):
         index = ivf_pq_index(df, C, books, residual=True).cache()
@@ -210,15 +189,13 @@ def test_full_trained_quantizers_serve_ivf_pq(spark):
         index.unpersist()
         return hits / (10 * len(qids))
 
-    C_f = train_ivf_centroids_full(df, n_centroids=k_c, iters=iters, init_sample=init)
-    B_f = train_pq_codebooks_full(
-        df, m=4, n_codes=32, iters=4, centroids=C_f, init_sample=init
-    )
-    r_full = served_recall(C_f, B_f)
+    def trained(sample):
+        C = train_ivf_centroids(df, n_centroids=k_c, iters=iters, sample=sample)
+        B = train_pq_codebooks_residual(df, C, m=4, n_codes=32, iters=4, sample=sample)
+        return C, B
 
-    C_s = train_ivf_centroids(df, n_centroids=k_c, iters=iters, sample=init)
-    B_s = train_pq_codebooks_residual(df, C_s, m=4, n_codes=32, iters=4, sample=init)
-    r_sampled = served_recall(C_s, B_s)
+    r_full = served_recall(*trained(len(rows)))
+    r_sampled = served_recall(*trained(prefix))
 
     assert r_full >= 0.9, (r_full, r_sampled)
     assert r_full > r_sampled, (r_full, r_sampled)

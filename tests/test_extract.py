@@ -121,59 +121,6 @@ def test_expr_path_stays_jvm_side(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_streaming_html_ingest_matches_batch_build(spark, tmp_path):
-    """extract_text_expr is a plain Catalyst expression, so it composes
-    with Structured Streaming: html-only pages arriving as micro-batches,
-    ingest_html applied to the STREAMING DataFrame, indexed by
-    start_stream_index — term stats identical to one batch build over
-    the stored text."""
-    import os
-
-    from whoosh_novo_spark.operators.build import build_segment
-    from whoosh_novo_spark.operators.query import Index
-    from whoosh_novo_spark.schema import FieldConfig, IndexConfig
-    from whoosh_novo_spark.sources.segment_store import SegmentStore
-    from whoosh_novo_spark.streaming.ingest import start_stream_index
-
-    docs = synthesize_corpus(spark, n_docs=400, n_partitions=2, seed=33).cache()
-    cfg = IndexConfig(id_col="url", fields=(FieldConfig("text"),), stored_cols=())
-
-    src = str(tmp_path / "pages")
-    os.makedirs(src)
-    half = docs.where(F.crc32(F.col("url")) % 2 == 0)
-    other = docs.exceptAll(half)
-    for i, part in enumerate((half, other)):
-        part.select("url", "html").coalesce(1).write.parquet(f"{src}/b{i}")
-
-    stream = (
-        spark.readStream.schema("url string, html binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/b*")
-    )
-    store = SegmentStore(str(tmp_path / "ix_stream"))
-    q = start_stream_index(
-        ingest_html(stream),
-        cfg,
-        store,
-        str(tmp_path / "ckpt"),
-        partitions=2,
-        auto_merge=False,
-    )
-    q.awaitTermination(180)
-    assert store.read_manifest().doc_count_all == 400
-
-    s_batch = SegmentStore(str(tmp_path / "ix_batch"))
-    build_segment(spark, docs, cfg, s_batch, partitions=2)
-
-    t1 = Index(spark, store, cfg).terms().select("field", "term", "df", "cf")
-    t2 = Index(spark, s_batch, cfg).terms().select("field", "term", "df", "cf")
-    # streaming built 2 segments; aggregate before comparing
-    a1 = t1.groupBy("field", "term").agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-    a2 = t2.groupBy("field", "term").agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-    assert a1.exceptAll(a2).count() == 0 and a2.exceptAll(a1).count() == 0
-    docs.unpersist()
-
-
 def test_ingest_title_goldens(spark):
     from whoosh_novo_spark.sources.extract import ingest_title
 

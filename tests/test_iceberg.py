@@ -443,57 +443,6 @@ def test_sync_crash_recovery_no_duplicates(spark, tmp_path):
     _os.remove(_os.path.join(store.path, _SYNC_MARKER + ".pending"))
 
 
-def test_streaming_iceberg_sync(spark, tmp_path):
-    """The polling loop indexes a growing table across two one-shot runs
-    and matches the batch sync operator's result."""
-    from pyspark.sql import functions as F
-
-    from whoosh_novo_spark.operators.query import Index, Searcher
-    from whoosh_novo_spark.plans import ast
-    from whoosh_novo_spark.schema import FieldConfig, IndexConfig
-    from whoosh_novo_spark.sources.iceberg import sync_index_from_iceberg
-    from whoosh_novo_spark.sources.segment_store import SegmentStore
-    from whoosh_novo_spark.streaming.iceberg_ingest import start_iceberg_sync
-
-    cfg = IndexConfig(id_col="url", fields=(FieldConfig("text"),))
-    loc = str(tmp_path / "stream_grow")
-    write_iceberg_table(spark, _pages(spark, 60, seed=31), loc, SCHEMA, ts_ms=1000)
-
-    store_s = SegmentStore(str(tmp_path / "ix_stream"))
-    q = start_iceberg_sync(
-        spark, loc, store_s, cfg,
-        checkpoint_dir=str(tmp_path / "ckpt1"),
-        columns=["url", "text"], partitions=2, available_now=True,
-    )
-    q.awaitTermination(120)
-    assert store_s.read_manifest().doc_count_all == 60
-
-    d2 = _pages(spark, 30, seed=57).withColumn("url", F.concat(F.col("url"), F.lit("-d")))
-    write_iceberg_table(spark, d2, loc, SCHEMA, ts_ms=2000)
-    q = start_iceberg_sync(
-        spark, loc, store_s, cfg,
-        checkpoint_dir=str(tmp_path / "ckpt2"),
-        columns=["url", "text"], partitions=2, available_now=True,
-    )
-    q.awaitTermination(120)
-    assert store_s.read_manifest().doc_count_all == 90
-
-    # parity with the batch sync operator over the same table
-    store_b = SegmentStore(str(tmp_path / "ix_batch"))
-    sync_index_from_iceberg(spark, loc, store_b, cfg, columns=["url", "text"], partitions=2)
-    ss, sb = Searcher(Index(spark, store_s, cfg)), Searcher(Index(spark, store_b, cfg))
-    for qq in (ast.Term("text", "render"),
-               ast.Or((ast.Term("text", "render"), ast.Term("text", "shade")))):
-        # docids may differ (1 segment vs 2): compare via url join
-        um = ss.index.docmap(columns=["docid", "url"])
-        bm = sb.index.docmap(columns=["docid", "url"])
-        a = {(r["url"], round(float(r["score"]), 9))
-             for r in ss.search(qq, limit=None).join(um, "docid").collect()}
-        b = {(r["url"], round(float(r["score"]), 9))
-             for r in sb.search(qq, limit=None).join(bm, "docid").collect()}
-        assert a == b
-
-
 def test_additive_schema_evolution(spark, tmp_path):
     """A column added after files were written: the read projects the
     table's CURRENT schema — old files yield null for the new column,

@@ -188,47 +188,6 @@ def test_merge_preserves_per_language_counts(spark, tmp_path):
     assert hits >= 3
 
 
-def test_streaming_routed_ingest(spark, tmp_path):
-    """lang_routed configs flow through the streaming foreachBatch
-    ingest unchanged: each micro-batch commits a routed segment, and the
-    manifest's per-language doc counts ACCUMULATE across generations
-    (Manifest.doc_count_for sums per-segment field_doc_count)."""
-    import os
-
-    from whoosh_novo_spark.streaming.ingest import start_stream_index
-
-    rows = _rows()
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    half = len(rows) // 2
-    for i, sl in enumerate((rows[:half], rows[half:])):
-        spark.createDataFrame(
-            sl, "rid string, text string, lang string"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{src}/batch{i}")
-
-    stream = (
-        spark.readStream.schema("rid string, text string, lang string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/batch*")
-    )
-    cfg = IndexConfig(id_col="rid", fields=(FieldConfig("text", lang_routed=True),))
-    store = SegmentStore(str(tmp_path / "ix"))
-    q = start_stream_index(
-        stream, cfg, store, str(tmp_path / "ckpt"), partitions=2, auto_merge=False
-    )
-    q.awaitTermination(120)
-
-    ix = Index(spark, store, cfg)
-    assert len(ix.manifest.segments) == 2
-    assert ix.doc_count_for("text@de") == len(DE)
-    assert ix.doc_count_for("text@en") == len(EN)
-    assert ix.lang_variants("text") == ["text@de", "text@en"]
-    # cross-generation virtual-field query sees docs from both batches
-    s = Searcher(ix)
-    hits = s.search(ast.Term("text@en", "water"), limit=50).count()
-    assert hits >= 3
-
-
 def test_parser_virtual_field_syntax(spark, built):
     """The query language reaches virtual fields with zero parser
     changes: 'text@de:wass' explicit-field syntax, a virtual default

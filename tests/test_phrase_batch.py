@@ -120,38 +120,3 @@ def test_batch_equals_per_query(spark, tmp_path_factory):
         assert [d for _, d, _ in brows] == [r["docid"] for r in solo], qid
         for (_, _, s1), r in zip(brows, solo):
             assert s1 == pytest.approx(r["score"], rel=1e-12)
-
-
-def test_search_batch_joined_equals_cached(spark, tmp_path):
-    """stats_mode='joined' (in-plan broadcast stats join, the batch scale
-    default) must reproduce stats_mode='cached' exactly, including AND
-    queries with absent terms (resolved by the post-agg count check)."""
-    from whoosh_novo_spark.operators.batch import search_batch
-    from whoosh_novo_spark.sources.corpus import corpus_pandas
-
-    pdf = corpus_pandas(150, seed=9, vocab_size=120)
-    store = SegmentStore(str(tmp_path / "jb_ix"))
-    config = IndexConfig(id_col="url", fields=(FieldConfig("text"),))
-    df = spark.createDataFrame(
-        list(zip(pdf["url"], pdf["text"])), "url string, text string"
-    )
-    build_segment(spark, df, config, store, partitions=2)
-    searcher = Searcher(Index(spark, store, config))
-    T = lambda w: ast.Term("text", w)  # noqa: E731
-    qs = {
-        "t": T("render"),
-        "or": ast.Or((T("render"), T("shade"))),
-        "and": ast.And((T("render"), T("shade"))),
-        "and_absent": ast.And((T("render"), T("zzzznope"))),
-        "dmax": ast.DisjunctionMax((T("render"), T("shade"))),
-    }
-
-    def rows(mode):
-        return sorted(
-            (r["qid"], r["rank"], r["docid"], round(r["score"], 9))
-            for r in search_batch(searcher, qs, limit=10, stats_mode=mode).collect()
-        )
-
-    a, b = rows("cached"), rows("joined")
-    assert a == b and a
-    assert not any(q == "and_absent" for q, *_ in a)

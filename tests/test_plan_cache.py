@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 from whoosh_novo_spark.operators.build import build_segment
-from whoosh_novo_spark.operators.query import Index, Searcher
+from whoosh_novo_spark.operators.query import PLAN_CACHE_SIZE, Index, Searcher
 from whoosh_novo_spark.operators.wand import search_wand
 from whoosh_novo_spark.plans import ast
 from whoosh_novo_spark.schema import FieldConfig, IndexConfig
@@ -84,3 +84,33 @@ def test_wand_cost_route_below_cutoff(searcher):
     fplan = forced._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in fplan
     assert [d for d, _ in _rows(forced)] == [d for d, _ in _rows(routed)]
+
+
+def test_lru_keeps_a_hot_plan(searcher):
+    """A plan that keeps being hit survives PLAN_CACHE_SIZE inserts of
+    other plans; the least recently used entry goes instead."""
+    s = Searcher(searcher.index)
+    hot = ast.Term("text", "render")
+    want = _rows(s.search(hot, limit=5))
+    (hot_key, hot_plan), = s._plan_cache.items()
+    filler = s.index.empty_scored()
+    for i in range(PLAN_CACHE_SIZE):
+        s._cached_plan(("filler", i), lambda: filler)
+        if i % 128 == 127:
+            s.search(hot, limit=5)  # hit: moves the plan to the recent end
+    assert len(s._plan_cache) == PLAN_CACHE_SIZE
+    assert s._plan_cache[hot_key] is hot_plan  # never evicted or rebuilt
+    assert ("filler", 0) not in s._plan_cache
+    assert _rows(s.search(hot, limit=5)) == want
+
+
+def test_wand_plans_count_toward_the_bound(searcher):
+    s = Searcher(searcher.index)
+    q = ast.Or((ast.Term("text", "render"), ast.Term("text", "shade")))
+    search_wand(s, q, limit=10)  # below the cutoff: also plans search(q)
+    (wand_key,) = [k for k in s._plan_cache if k[0] == "wand"]
+    filler = s.index.empty_scored()
+    for i in range(PLAN_CACHE_SIZE):
+        s._cached_plan(("filler", i), lambda: filler)
+    assert len(s._plan_cache) == PLAN_CACHE_SIZE
+    assert wand_key not in s._plan_cache  # the least recently used plan

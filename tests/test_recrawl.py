@@ -105,66 +105,3 @@ def test_pipeline_stage_composes(crawl):
         stages=("url_normalize", "latest_crawl"),
     )
     assert out.count() == 5
-
-
-# ---------------- streaming twin ----------------
-
-B1 = [
-    ("http://s.com/a?utm_source=x", "2026-01-01 00:00:00", "a v1"),
-    ("http://s.com/a", "2026-01-02 00:00:00", "a v2"),  # same-batch newer
-    ("http://s.com/b", "2026-01-05 00:00:00", "b v1"),
-]
-B2 = [
-    ("http://S.com/a", "2026-01-09 00:00:00", "a v3"),  # newer -> emits
-    ("http://s.com/b", "2026-01-03 00:00:00", "b stale"),  # late stale -> suppressed
-    ("http://s.com/b", "2026-01-05 00:00:00", "b v1"),  # exact redelivery -> suppressed
-    ("http://s.com/c", "2026-01-01 00:00:00", "c v1"),
-]
-_SCHEMA = "url string, warc_ts timestamp, text string"
-
-
-def _run_stream(spark, tmp_path, name, batches):
-    from whoosh_novo_spark.streaming.dedup import latest_crawl_stream
-
-    src = str(tmp_path / f"src_{name}")
-    for rows in batches:
-        spark.createDataFrame(
-            [(u, dt.datetime.fromisoformat(t), x) for u, t, x in rows], _SCHEMA
-        ).coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
-    q = (
-        latest_crawl_stream(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.sql(f"SELECT * FROM {name}").collect()
-
-
-def test_stream_emits_only_strictly_newer(spark, tmp_path):
-    got = _run_stream(spark, tmp_path, "latest_crawl_s1", [B1, B2])
-    texts = sorted(r.text for r in got)
-    # batch 1: a v2 (beats same-batch v1), b v1; batch 2: a v3, c v1;
-    # stale + redelivered b rows suppressed
-    assert texts == ["a v2", "a v3", "b v1", "c v1"]
-
-
-def test_stream_final_state_matches_batch_operator(spark, tmp_path):
-    from whoosh_novo_spark.operators.dedup import keep_latest_crawl
-
-    got = _run_stream(spark, tmp_path, "latest_crawl_s2", [B1, B2])
-    # last emission per canonical url == batch keep-latest over all rows
-    final = {}
-    for r in sorted(got, key=lambda r: r.warc_ts):
-        final[r.url.lower().split("?")[0]] = (r.warc_ts, r.text)
-    allrows = spark.createDataFrame(
-        [(u, dt.datetime.fromisoformat(t), x) for u, t, x in B1 + B2], _SCHEMA
-    )
-    batch = {
-        r.url.lower().split("?")[0]: (r.warc_ts, r.text)
-        for r in keep_latest_crawl(allrows).collect()
-    }
-    assert final == batch

@@ -1,10 +1,7 @@
-"""Streaming ingest, facets, collapse, suggest, multimodal plumbing."""
+"""Facets, collapse and suggest over a built index."""
 
 from __future__ import annotations
 
-import os
-
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,47 +11,6 @@ from whoosh_novo_spark.plans import ast
 from whoosh_novo_spark.schema import FieldConfig, IndexConfig
 from whoosh_novo_spark.sources.corpus import corpus_pandas
 from whoosh_novo_spark.sources.segment_store import SegmentStore
-
-CFG = IndexConfig(id_col="url", fields=(FieldConfig("text"),))
-
-
-def test_streaming_ingest_matches_batch(spark, tmp_path, oracle_cls):
-    from whoosh_novo_spark.streaming.ingest import start_stream_index
-
-    pdf = corpus_pandas(150, seed=61, vocab_size=150).sort_values("url").reset_index(drop=True)
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    # two files arriving as separate micro-batch candidates
-    half = len(pdf) // 2
-    for i, sl in enumerate((pdf.iloc[:half], pdf.iloc[half:])):
-        spark.createDataFrame(
-            list(zip(sl["url"], sl["text"])), "url string, text string"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{src}/batch{i}")
-
-    stream = (
-        spark.readStream.schema("url string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/batch*")
-    )
-    store = SegmentStore(str(tmp_path / "ix"))
-    q = start_stream_index(
-        stream, CFG, store, str(tmp_path / "ckpt"), partitions=2, auto_merge=False
-    )
-    q.awaitTermination(120)
-
-    m = store.read_manifest()
-    assert m.doc_count_all == len(pdf)
-    assert len(m.segments) >= 1
-
-    searcher = Searcher(Index(spark, store, CFG))
-    got = searcher.search(ast.Term("text", "render"), limit=10)
-    withurl = searcher.fetch(got, ["url"]).orderBy(F.desc("score"), F.asc("docid")).collect()
-    # oracle over the same rows in url order (url-sorted batches keep the
-    # relative tie-break order even though streaming docids are per-batch)
-    oracle = oracle_cls([(u, t) for u, t in zip(pdf["url"], pdf["text"])])
-    theirs = oracle.query(oracle.make_query({"type": "term", "terms": ["render"]}), limit=10)
-    assert [r["url"] for r in withurl] == [u for u, _ in theirs]
-
 
 @pytest.fixture(scope="module")
 def built(spark, tmp_path_factory):
@@ -136,96 +92,3 @@ def test_suggest_matches_reference(built, oracle_cls):
             theirs = corr.suggest(word, limit=5, maxdist=2, prefix=0)
             ours = suggest(ix, "text", word, limit=5, maxdist=2, prefix=0)
             assert ours == theirs, (word, ours, theirs)
-
-
-def test_multimodal_plumbing(spark):
-    from whoosh_novo_spark.operators.multimodal import (
-        frame_sample,
-        image_features,
-        media_metadata,
-    )
-
-    pdf = corpus_pandas(30, seed=81, vocab_size=50)
-    df = spark.createDataFrame(
-        [(i, bytes(h)) for i, h in enumerate(pdf["html"])], "id long, payload binary"
-    )
-    meta = media_metadata(df, "id", "payload", "image").collect()
-    assert len(meta) == 30 and all(r["byte_len"] > 0 for r in meta)
-
-    # codec-format payloads refuse to decode without fake=True (the raise
-    # now happens inside the Arrow kernel, where the format is known)
-    with pytest.raises(Exception, match="NotImplementedError|codec|fake=True"):
-        image_features(df, "id", "payload").collect()
-
-    feats = image_features(df, "id", "payload", feature_dim=8, fake=True)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(len(r["feature"]) == 8 for r in rows)
-    # deterministic: same content -> same features
-    again = {r["id"]: list(r["feature"]) for r in image_features(df, "id", "payload", feature_dim=8, fake=True).collect()}
-    assert all(list(r["feature"]) == again[r["id"]] for r in rows)
-
-    fr = frame_sample(df, "id", "payload", every_n=5, max_frames=3, fake=True).collect()
-    assert len(fr) > 0
-    assert all(r["frame_no"] % 5 == 0 for r in fr)
-
-
-def _ppm(w, h, rng):
-    px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-    return b"P6\n# comment\n%d %d\n255\n" % (w, h) + px.tobytes(), px
-
-
-def _bmp(w, h, rng):
-    px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-    stride = (w * 3 + 3) & ~3
-    rows = np.zeros((h, stride), dtype=np.uint8)
-    rows[:, : w * 3] = px[::-1, :, ::-1].reshape(h, w * 3)  # bottom-up BGR
-    header = (
-        b"BM"
-        + (14 + 40 + stride * h).to_bytes(4, "little")
-        + b"\x00\x00\x00\x00"
-        + (54).to_bytes(4, "little")
-        + (40).to_bytes(4, "little")
-        + w.to_bytes(4, "little")
-        + h.to_bytes(4, "little")
-        + (1).to_bytes(2, "little")
-        + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little")
-        + (stride * h).to_bytes(4, "little")
-        + b"\x00" * 16
-    )
-    return header + rows.tobytes(), px
-
-
-def test_real_image_decode(spark):
-    """PPM/PGM/BMP decode is REAL (pure numpy): decoded dims and pixel
-    features come from the actual payload."""
-    import numpy as _np
-
-    from whoosh_novo_spark.operators.multimodal import (
-        _real_features,
-        decode_image,
-        image_features,
-        resize_image,
-    )
-
-    rng = np.random.default_rng(9)
-    ppm_bytes, ppm_px = _ppm(7, 5, rng)
-    bmp_bytes, bmp_px = _bmp(6, 4, rng)
-    assert (decode_image(ppm_bytes) == ppm_px).all()
-    assert (decode_image(bmp_bytes) == bmp_px).all()
-    pgm = b"P5\n4 3\n255\n" + bytes(range(12))
-    g = decode_image(pgm)
-    assert g.shape == (3, 4, 1) and g.reshape(-1).tolist() == list(range(12))
-    # nearest-neighbor resize round-trips exact on integer upscales
-    up = resize_image(ppm_px, 14, 10)
-    assert (up[::2, ::2] == ppm_px).all()
-
-    df = spark.createDataFrame(
-        [(0, ppm_bytes), (1, bmp_bytes)], "id long, payload binary"
-    )
-    rows = {r["id"]: r for r in image_features(df, "id", "payload", feature_dim=8).collect()}
-    assert (rows[0]["width"], rows[0]["height"], rows[0]["channels"]) == (7, 5, 3)
-    assert (rows[1]["width"], rows[1]["height"], rows[1]["channels"]) == (6, 4, 3)
-    want = _real_features(ppm_px, 8)
-    assert _np.allclose(rows[0]["feature"], want, atol=1e-6)

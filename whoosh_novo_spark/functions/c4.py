@@ -1,8 +1,8 @@
 """C4 cleaning rules (Raffel et al. 2020, "Exploring the Limits of
 Transfer Learning..." §2.2 — public): the most-cited heuristic recipe
 for web text, complementary to the Gopher repetition suite
-(functions/repetition.py) and the CCNet perplexity gate
-(functions/ngram_lm.py).
+(functions/repetition.py) and the learned quality classifier
+(functions/quality_clf.py).
 
 Published rules implemented, all as JVM-side expressions:
 

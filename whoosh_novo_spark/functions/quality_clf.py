@@ -1,7 +1,6 @@
 """Learned quality classifier: the reference-vs-crawl linear model
-(the third standard webtext quality gate, next to the Gopher heuristics
-in functions/repetition.py + functions/c4.py and the Stupid-Backoff LM
-perplexity in functions/ngram_lm.py).
+(the model-based webtext quality gate, next to the Gopher heuristics
+in functions/repetition.py + functions/c4.py).
 
 The published pipelines (the GPT-3 "WebText-vs-crawl" classifier, CCNet's
 fastText quality buckets, RefinedWeb's ablations) all use the same shape:

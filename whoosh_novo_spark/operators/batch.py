@@ -41,21 +41,14 @@ def search_batch(
     searcher: Searcher,
     queries: dict[str, ast.Query],
     limit: int = 10,
-    stats_mode: str = "auto",
 ) -> DataFrame:
     """Evaluate all queries; returns (qid, docid, score, rank) with
     rank 1..limit per qid ordered (score desc, docid asc) — identical
     per-query results to Searcher.search.
 
-    ``stats_mode``: "cached" (the default via "auto") pre-fetches stats
-    in one bounded driver lookup and bakes literal factors into the
-    broadcast map; "joined" computes the idf stats with a broadcast join
-    against the terms table INSIDE the one batch job.  Measured on the
-    600k scaling harness the joined plan is ~8% SLOWER end-to-end (the
-    in-plan stats query-stage + per-segment fold cost more than the
-    1.3 s driver lookup they replace), so "auto" resolves to cached;
-    "joined" stays available for clusters where a driver round-trip to
-    the terms table is expensive (e.g. remote object storage)."""
+    Term stats come from one bounded driver lookup (the searcher's stats
+    cache) and ride as literal factors in the broadcast (qid, term,
+    factor) map."""
     ix = searcher.index
     spark = ix.spark
 
@@ -76,10 +69,6 @@ def search_batch(
         flat = {}
 
     fieldnames = sorted({t.fieldname for _, ts in flat.values() for t in ts})
-    joined = stats_mode == "joined" and all(
-        ix.config.field(f).scorable and searcher._supports_joined_stats(f)
-        for f in fieldnames
-    )
 
     parts: list[DataFrame] = []
     if flat:
@@ -88,23 +77,16 @@ def search_batch(
         # int key is materially cheaper than a repeated string; the
         # string qid is re-attached after the top-k filter (tiny)
         qno_of = {qid: i for i, qid in enumerate(flat)}
-        stats = None
-        if not joined:
-            pairs = sorted(
-                {(t.fieldname, t.text) for _, ts in flat.values() for t in ts}
-            )
-            stats = searcher._cached_stats(list(pairs))
+        pairs = sorted(
+            {(t.fieldname, t.text) for _, ts in flat.values() for t in ts}
+        )
+        stats = searcher._cached_stats(pairs)
         qt_rows = []
         qmeta_rows = []
         for qid, (kind, ts) in flat.items():
             n = len(ts)
             present = 0
             for t in ts:
-                if joined:
-                    # presence/idf resolved in-plan by the stats join;
-                    # the map carries only the per-term boost
-                    qt_rows.append((qno_of[qid], t.fieldname, t.text, float(t.boost)))
-                    continue
                 st = stats.get((t.fieldname, t.text))
                 if st is None:
                     continue
@@ -115,20 +97,17 @@ def search_batch(
                 ) * t.boost
                 qt_rows.append((qno_of[qid], t.fieldname, t.text, float(factor)))
             qmeta_rows.append((qno_of[qid], kind, n, present))
-        if not joined:
-            # drop AND queries with absent required terms before the big
-            # scan — known driver-side here, so filter the PYTHON rows
-            # instead of paying a broadcast + semi join in the plan
-            # (joined mode relies on the post-agg _nc == n_terms check
-            # instead — absence is not known driver-side there)
-            dead = {
-                qno
-                for qno, kind, n, present in qmeta_rows
-                if kind == "and" and present < n
-            }
-            if dead:
-                qt_rows = [r for r in qt_rows if r[0] not in dead]
-                qmeta_rows = [r for r in qmeta_rows if r[0] not in dead]
+        # drop AND queries with absent required terms before the big
+        # scan — known driver-side here, so filter the PYTHON rows
+        # instead of paying a broadcast + semi join in the plan
+        dead = {
+            qno
+            for qno, kind, n, present in qmeta_rows
+            if kind == "and" and present < n
+        }
+        if dead:
+            qt_rows = [r for r in qt_rows if r[0] not in dead]
+            qmeta_rows = [r for r in qmeta_rows if r[0] not in dead]
         qt = spark.createDataFrame(
             qt_rows, "qno int, field string, term string, factor double"
         )
@@ -151,34 +130,7 @@ def search_batch(
         # one scan x broadcast join: each posting row fans out only to the
         # queries that contain its term
         w, flq = F.col("weight"), F.col("len_q")
-        if joined:
-            # (field, term, df, cf) broadcast side folded across segments
-            sides = []
-            by_field: dict[str, list[str]] = {}
-            for _, f, t, _ in qt_rows:
-                by_field.setdefault(f, []).append(t)
-            for f in fieldnames:
-                agg = searcher._term_stats_agg(f, sorted(set(by_field[f])))
-                sides.append(agg.select(F.lit(f).alias("field"), "term", "df", "cf"))
-            stats_side = sides[0]
-            for s_ in sides[1:]:
-                stats_side = stats_side.unionByName(s_)
-            p = p.join(F.broadcast(stats_side), ["field", "term"])
-            dfc, cfc = F.col("df").cast("double"), F.col("cf")
-            if len(fieldnames) == 1:
-                base = model.score_col_stats(
-                    searcher, fieldnames[0], w, flq, dfc, cfc
-                )
-            else:
-                base = None
-                for f in fieldnames:
-                    b = model.score_col_stats(searcher, f, w, flq, dfc, cfc)
-                    base = (
-                        F.when(F.col("field") == f, b)
-                        if base is None
-                        else base.when(F.col("field") == f, b)
-                    )
-        elif len(fieldnames) == 1:
+        if len(fieldnames) == 1:
             base = (
                 model.base_col(searcher, fieldnames[0], w, flq)
                 if ix.config.field(fieldnames[0]).scorable
@@ -201,22 +153,6 @@ def search_batch(
         scored = j.select(
             "qno", "docid", (base * F.col("factor")).alias("score")
         )
-        import os as _os
-
-        if _os.environ.get("WNS_BATCH_ONE_SHUFFLE", "0") == "1":
-            # MEASURED NEGATIVE (r5, VERDICT r4 task #6 A/B, kept as an
-            # opt-in for shuffle-bound clusters): hash partitioning on
-            # qno alone satisfies both the groupBy(qno, docid)
-            # ClusteredDistribution (subset rule) and the top-k window's
-            # partitionBy(qno), collapsing two exchanges to one — but
-            # interleaved same-session medians at the 1M index /
-            # 50-query batches were 2.84 s (two-shuffle) vs 2.86 s
-            # (one-shuffle): AQE already coalesces the small second
-            # exchange, and the single-key shuffle forgoes map-side
-            # (qno, docid) combining.  Results identical up to fp
-            # summation order (<=3 ulp).  Full A/B in
-            # BENCH/BASELINE.md §r5.
-            scored = scored.repartition("qno")
         grouped = scored.groupBy("qno", "docid").agg(
             F.sum("score").alias("_sum"),
             F.max("score").alias("_max"),

@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import math
 import re
+from collections import OrderedDict
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +47,7 @@ from whoosh_novo_spark.sources.segment_store import Manifest, SegmentStore
 
 B_DEFAULT = 0.75
 K1_DEFAULT = 1.2
+PLAN_CACHE_SIZE = 512  # prepared plans kept per Searcher
 
 
 def _fresh_dataframe(df: DataFrame) -> DataFrame:
@@ -318,11 +320,16 @@ class Index:
         terms — the broadcast 'term dictionary lookup' of the query."""
         if not pairs:
             return {}
-        local = self._term_stats_local(pairs)
-        if local is not None:
-            return local
+        want = set(pairs)
         fields = sorted({f for f, _ in pairs})
         texts = sorted({t for _, t in pairs})
+        local = self._lexicon_local(
+            [("field", "in", fields), ("term", "in", texts)],
+            lambda fld, trm: (fld, trm) in want,
+            {"pairs": list(pairs)},
+        )
+        if local is not None:
+            return local
         t = self.terms_span(pairs=list(pairs)).where(
             F.col("field").isin(fields) & F.col("term").isin(texts)
         )
@@ -340,74 +347,88 @@ class Index:
         ).collect()
         out = {}
         for r in rows:
-            if (r["field"], r["term"]) in set(pairs):
+            if (r["field"], r["term"]) in want:
                 out[(r["field"], r["term"])] = TermStats(
                     int(r["df"]), float(r["cf"]), float(r["max_weight"]), int(r["min_len_q"])
                 )
         return out
 
-    def _term_stats_local(
-        self, pairs: list[tuple[str, str]]
-    ) -> dict[tuple[str, str], TermStats] | None:
-        """Driver-side term-dictionary seek (r6): a bounded stats lookup
-        for <= the query's term count keys was a whole Spark job
-        (schedule + scan task + collect, 100-300 ms per COLD term set).
-        The terms table is a few (field, term)-range-sorted parquet
-        files; pyarrow reads just the matching row groups in-process in
-        ~5-15 ms.  Exact same rows as the Spark path: same files, same
-        predicate, integer sums — aggregated in manifest segment order.
-        Returns None (Spark fallback) for non-local storage schemes.
-        Deletes intentionally don't affect stats (whoosh counts deleted
-        docs in df/cf until merge — SURVEY §1.4), same as the Spark
-        path.  Kill switch: WNS_NO_LOCAL_STATS=1."""
+    def _local_terms_files(self) -> list[str] | None:
+        """Local paths of every terms file in the manifest, in manifest
+        segment order — listed once per Index, since a committed manifest
+        is immutable.  None when a terms dir is not on local storage."""
         import os as _os
-
-        if _os.environ.get("WNS_NO_LOCAL_STATS") == "1":
-            return None
         from urllib.parse import urlparse
 
-        files: list[str] = []
+        # lazy-init (getattr): Index subclasses may skip this __init__
+        files = getattr(self, "_terms_files", False)
+        if files is not False:
+            return files
+        files = []
         try:
             for p in self.store.table_paths(self.manifest, "terms"):
                 if urlparse(p).scheme not in ("", "file"):
-                    return None
+                    files = None
+                    break
                 d = p[7:] if p.startswith("file://") else p
                 if not _os.path.isdir(d):
-                    return None
+                    files = None
+                    break
                 files.extend(
                     _os.path.join(d, fn)
                     for fn in sorted(_os.listdir(d))
                     if fn.endswith(".parquet")
                 )
-        except Exception:
+        except OSError:  # unlistable dir: the Spark path reads it instead
+            files = None
+        self._terms_files = files or None
+        return self._terms_files
+
+    def _lexicon_local(
+        self, filters: list[tuple], keep, prune: dict, cap: int | None = None
+    ) -> dict[tuple[str, str], TermStats] | None:
+        """Driver-side term-dictionary read (r6), the one local lexicon
+        reader behind ``term_stats`` and ``expand_terms_local``.  A
+        bounded stats lookup as a Spark job costs 100-300 ms per COLD
+        term set (schedule + scan task + collect); the terms table is a
+        few (field, term)-range-sorted parquet files, and pyarrow reads
+        just the matching row groups in-process in ~5-15 ms.
+
+        ``filters`` is the pyarrow row filter, ``keep(field, term)`` the
+        exact membership test on the rows it returns, and ``prune`` the
+        ``prune_files`` keys (same manifest bounds the Spark path prunes
+        with).  Same rows as the Spark path: same files, same predicate,
+        folded sum/sum/max/min across segments in manifest order.
+        Deletes intentionally don't affect stats (whoosh counts deleted
+        docs in df/cf until merge — SURVEY §1.4), same as the Spark path.
+
+        Returns {(field, term): stats}, or None — the caller's Spark
+        fallback — for non-local storage, an unreadable footer or filter
+        edge, or more than ``cap`` distinct keys.  Kill switch:
+        WNS_NO_LOCAL_STATS=1."""
+        import os as _os
+
+        if _os.environ.get("WNS_NO_LOCAL_STATS") == "1":
             return None
+        files = self._local_terms_files()
         if not files:
             return None
-        # file-level pruning via the cached spans (same manifest bounds
-        # the Spark path prunes with); files without spans are kept
         ranges = self._file_ranges("terms")
         if ranges:
             from whoosh_novo_spark.sources.file_prune import prune_files
 
-            keep = prune_files(ranges, None, pairs=list(pairs))
-            if keep is not None:
-                keepset = {
-                    k[7:] if k.startswith("file://") else k for k in keep
-                }
-                pruned = [f for f in files if f in keepset]
-                if pruned:
-                    files = pruned
+            kept = prune_files(ranges, **prune)
+            if kept is not None:
+                keepset = {k[7:] if k.startswith("file://") else k for k in kept}
+                # files without spans are kept by prune_files
+                files = [f for f in files if f in keepset] or files
         import pyarrow.parquet as pq
 
-        fields = sorted({f for f, _ in pairs})
-        texts = sorted({t for _, t in pairs})
         cols = ["field", "term", "df", "cf", "max_weight", "min_len_q"]
-        flt = [("field", "in", fields), ("term", "in", texts)]
-        want = set(pairs)
         acc: dict[tuple[str, str], list] = {}
         try:
             for f in files:
-                t = pq.read_table(f, columns=cols, filters=flt)
+                t = pq.read_table(f, columns=cols, filters=filters)
                 if t.num_rows == 0:
                     continue
                 d = t.to_pydict()
@@ -415,11 +436,13 @@ class Index:
                     d["field"], d["term"], d["df"], d["cf"],
                     d["max_weight"], d["min_len_q"],
                 ):
-                    k = (fld, trm)
-                    if k not in want:
+                    if not keep(fld, trm):
                         continue
+                    k = (fld, trm)
                     got = acc.get(k)
                     if got is None:
+                        if cap is not None and len(acc) >= cap:
+                            return None  # fat expansion: distributed plan
                         acc[k] = [int(df_), float(cf_), float(mw), int(mlq)]
                     else:  # cross-segment fold (sum/sum/max/min)
                         got[0] += int(df_)
@@ -434,23 +457,19 @@ class Index:
         self, q: ast.Query, cap: int = 128
     ) -> list[tuple[str, TermStats]] | None:
         """Driver-side bounded expansion for Prefix/TermRange (r6): the
-        lexicon slice is read in-process with pyarrow (the same local
-        seek as _term_stats_local) so a SMALL expansion can compile to
-        the literal-factor single-scan plan — no expansion subquery, no
-        broadcast stage, no count job.  Returns [(term, stats)] sorted
-        by term, or None when not applicable (other query types,
-        non-local storage, or more than ``cap`` expanded terms — the
-        distributed join IS the right plan for fat expansions).
+        lexicon slice is read in-process by ``_lexicon_local`` so a SMALL
+        expansion can compile to the literal-factor single-scan plan — no
+        expansion subquery, no broadcast stage, no count job.  Returns
+        [(term, stats)] sorted by term, or None when not applicable
+        (other query types, non-local storage, or more than ``cap``
+        expanded terms — the distributed join IS the right plan for fat
+        expansions).
 
         Only Prefix/TermRange qualify because their membership predicate
         has an exact Python twin (startswith / code-point range compare
         == Spark's UTF8 binary compare); Wildcard/Regex/Fuzzy use Spark
         expression semantics (Java regex, levenshtein) that must stay
         in-plan to stay identical."""
-        import os as _os
-
-        if _os.environ.get("WNS_NO_LOCAL_STATS") == "1":
-            return None
         if isinstance(q, ast.Prefix):
             pred = lambda t: t.startswith(q.text)  # noqa: E731
         elif isinstance(q, ast.TermRange):
@@ -470,40 +489,7 @@ class Index:
                 return True
         else:
             return None
-        from urllib.parse import urlparse
-
-        files: list[str] = []
-        try:
-            for p in self.store.table_paths(self.manifest, "terms"):
-                if urlparse(p).scheme not in ("", "file"):
-                    return None
-                d = p[7:] if p.startswith("file://") else p
-                if not _os.path.isdir(d):
-                    return None
-                files.extend(
-                    _os.path.join(d, fn)
-                    for fn in sorted(_os.listdir(d))
-                    if fn.endswith(".parquet")
-                )
-        except Exception:
-            return None
-        if not files:
-            return None
         b_lo, b_hi = _multiterm_file_bounds(q)
-        ranges = self._file_ranges("terms")
-        if ranges:
-            from whoosh_novo_spark.sources.file_prune import prune_files
-
-            keep = prune_files(ranges, q.fieldname, lo=b_lo, hi=b_hi)
-            if keep is not None:
-                keepset = {
-                    k[7:] if k.startswith("file://") else k for k in keep
-                }
-                pruned = [f for f in files if f in keepset]
-                if pruned:
-                    files = pruned
-        import pyarrow.parquet as pq
-
         flt = [("field", "==", q.fieldname)]
         if isinstance(q, ast.Prefix):
             flt.append(("term", ">=", q.text))
@@ -514,33 +500,15 @@ class Index:
                 flt.append(("term", ">" if q.startexcl else ">=", q.start))
             if q.end is not None:
                 flt.append(("term", "<" if q.endexcl else "<=", q.end))
-        cols = ["field", "term", "df", "cf", "max_weight", "min_len_q"]
-        acc: dict[str, list] = {}
-        try:
-            for f in files:
-                t = pq.read_table(f, columns=cols, filters=flt)
-                if t.num_rows == 0:
-                    continue
-                d = t.to_pydict()
-                for fld, trm, df_, cf_, mw, mlq in zip(
-                    d["field"], d["term"], d["df"], d["cf"],
-                    d["max_weight"], d["min_len_q"],
-                ):
-                    if fld != q.fieldname or not pred(trm):
-                        continue
-                    got = acc.get(trm)
-                    if got is None:
-                        if len(acc) >= cap:
-                            return None  # fat expansion: distributed plan
-                        acc[trm] = [int(df_), float(cf_), float(mw), int(mlq)]
-                    else:
-                        got[0] += int(df_)
-                        got[1] += float(cf_)
-                        got[2] = max(got[2], float(mw))
-                        got[3] = min(got[3], int(mlq))
-        except Exception:
+        got = self._lexicon_local(
+            flt,
+            lambda fld, trm: fld == q.fieldname and pred(trm),
+            {"fieldname": q.fieldname, "lo": b_lo, "hi": b_hi},
+            cap=cap,
+        )
+        if got is None:
             return None
-        return [(t, TermStats(*acc[t])) for t in sorted(acc)]
+        return [(t, st) for (_, t), st in sorted(got.items())]
 
     def expand_terms_df(self, q: ast.Query) -> DataFrame:
         """Multi-term expansion as a DataFrame over the terms table —
@@ -595,7 +563,6 @@ class Searcher:
         B: float = B_DEFAULT,
         K1: float = K1_DEFAULT,
         weighting=None,
-        stats_mode: str = "cached",
     ):
         from whoosh_novo_spark.plans.weighting import BM25F
 
@@ -603,27 +570,18 @@ class Searcher:
         self.B = B
         self.K1 = K1
         self.model = weighting if weighting is not None else BM25F(B, K1)
+        # Term/flat-compound plans get idf stats from one bounded driver
+        # lookup per COLD term (<= the query's term count rows; the
+        # term-dictionary seek every engine does — whoosh's Searcher idf
+        # cache, searching.py:332-348), then bake literal idf factors
+        # in-plan, so warm queries add zero plan weight.  Unbounded
+        # multiterm expansions (Prefix/Fuzzy/...) use the distributed
+        # join instead: collecting an expansion is a scale hazard, a
+        # <=len(terms) stats lookup is not.
         self._stats_cache: dict[tuple[str, str], TermStats | None] = {}
-        # prepared-plan cache (see Searcher.search): plans only, never rows
-        self._plan_cache: dict[tuple, DataFrame] = {}
-        # How Term/flat-compound plans obtain idf stats (measured decision,
-        # BENCH/ab_r1_vs_r3*.json):
-        # - "cached" (default): one bounded driver lookup per COLD term
-        #   (<= query's term count rows; the term-dictionary seek every
-        #   engine does — whoosh's Searcher idf cache, searching.py:332-348),
-        #   then literal idf factors in-plan.  Warm queries add ZERO plan
-        #   weight; under AQE the joined alternative serializes an extra
-        #   broadcast query-stage into EVERY query (+0.1-0.2 s at local
-        #   scale, and a latency floor at cluster scale).
-        # - "joined": idf from a broadcast terms-table join inside the ONE
-        #   query job — no driver round-trip; best for one-shot cold
-        #   queries in batch pipelines.
-        # Unbounded multiterm expansions (Prefix/Fuzzy/...) ALWAYS use the
-        # distributed join regardless of mode: collecting an expansion is
-        # a scale hazard, a <=len(terms) stats lookup is not.
-        if stats_mode not in ("cached", "joined"):
-            raise ValueError(f"stats_mode must be 'cached' or 'joined': {stats_mode!r}")
-        self.stats_mode = stats_mode
+        # prepared-plan cache (see Searcher._cached_plan): plans only,
+        # never rows; least-recently-used order, oldest first
+        self._plan_cache: OrderedDict[object, DataFrame] = OrderedDict()
 
     def _cached_stats(self, pairs: list[tuple[str, str]]) -> dict[tuple[str, str], TermStats]:
         """Per-searcher cache of term stats (idf cache analogue,
@@ -712,29 +670,40 @@ class Searcher:
         files are immutable; deletes/merges commit a NEW manifest read
         by a new Index)."""
         qn = q.normalize()
+
+        def build() -> DataFrame:
+            out = self.score_df(qn).orderBy(F.desc("score"), F.asc("docid"))
+            return out.limit(limit) if limit is not None else out
+
+        return self._cached_plan((qn, limit), build)
+
+    def _cached_plan(self, key: tuple, build) -> DataFrame:
+        """The prepared-plan cache shared by ``search`` and ``search_wand``:
+        a FRESH Dataset over the cached logical plan for ``key``, else
+        ``build()``'s plan, cached.  Least-recently-used eviction bounds
+        it at PLAN_CACHE_SIZE plans, so a hot plan survives any number of
+        one-off queries.  A runtime without the classic Dataset
+        internals can't guarantee fresh execution: nothing is cached."""
         try:
-            key = (qn, limit)
             hash(key)
         except TypeError:  # unhashable query payload: fall back to repr
-            key = (repr(qn), limit)
-        cached = self._plan_cache.get(key)
+            key = repr(key)
+        cache = self._plan_cache
+        cached = cache.get(key)
         if cached is not None:
+            cache.move_to_end(key)
             try:
                 return _fresh_dataframe(cached)
             except Exception:  # runtime without classic Dataset internals
-                self._plan_cache.clear()
-        scored = self.score_df(qn)
-        out = scored.orderBy(F.desc("score"), F.asc("docid"))
-        if limit is not None:
-            out = out.limit(limit)
+                cache.clear()
+        out = build()
         try:
             fresh = _fresh_dataframe(out)
         except Exception:
             return out  # can't guarantee fresh execution: don't cache
-        if len(self._plan_cache) >= 512:  # bounded: drop ~oldest half
-            for k in list(self._plan_cache)[:256]:
-                del self._plan_cache[k]
-        self._plan_cache[key] = out
+        cache[key] = out
+        if len(cache) > PLAN_CACHE_SIZE:
+            cache.popitem(last=False)
         return fresh
 
     def _is_text_field(self, name: str) -> bool:
@@ -750,63 +719,16 @@ class Searcher:
         except KeyError:
             return False
 
-    def _supports_joined_stats(self, fieldname: str) -> bool:
-        """True when this model can score with per-term stats joined in as
-        columns — Term/flat-compound plans then need NO driver-side stats
-        lookup job (the idf factors come from a broadcast join against the
-        terms table inside the ONE query job)."""
-        key = ("_joincap", fieldname)
-        got = self._stats_cache.get(key)
-        if got is None:
-            try:
-                got = (
-                    self.model.score_col_stats(
-                        self,
-                        fieldname,
-                        F.col("weight"),
-                        F.col("len_q"),
-                        F.col("df").cast("double"),
-                        F.col("cf"),
-                    )
-                    is not None
-                )
-            except Exception:
-                got = False
-            self._stats_cache[key] = got
-        return bool(got)
-
-    def _term_stats_agg(self, fieldname: str, texts: list[str]) -> DataFrame:
-        """Cross-segment (term, df, cf) aggregate for a tiny term set —
-        the broadcast side of the joined-stats plans.  A single-segment
-        index skips the fold: its terms table is already unique per
-        (field, term), so the groupBy's Exchange would add a stage to
-        EVERY query for nothing (measured +0.1-0.2 s/query at local
-        scale, BENCH/ab_r1_vs_r3.json)."""
-        t = self.index.terms_span(
-            pairs=[(fieldname, x) for x in texts]
-        ).where((F.col("field") == fieldname) & F.col("term").isin(texts))
-        if len(self.index.manifest.segments) == 1:
-            return t.select("term", "df", "cf")
-        return t.groupBy("term").agg(
-            F.sum("df").alias("df"), F.sum("cf").alias("cf")
-        )
-
     def score_df(self, q: ast.Query) -> DataFrame:
         """Full scored match set (docid, score) for a normalized query."""
         if isinstance(q, ast.NullQuery):
             return self.index.empty_scored()
         # Prefetch driver-side stats in ONE bounded lookup for every text
-        # term leaf (cached mode; warm terms are free), or only for leaves
-        # whose field/model combination can't use the joined-stats plan
-        # (joined mode; Phrase fetches its own)
+        # term leaf (warm terms are free)
         pairs = [
             (t.fieldname, t.text)
             for t in ast.term_leaves(q)
             if self._is_text_field(t.fieldname)
-            and (
-                self.stats_mode != "joined"
-                or not self._supports_joined_stats(t.fieldname)
-            )
         ]
         stats = self._cached_stats(pairs) if pairs else {}
         return self._compile(q, stats)
@@ -1014,16 +936,6 @@ class Searcher:
             if not self.index.config.field(q.fieldname).scorable:
                 # WeightScorer: raw weight, no stats job at all
                 return boost(p.select("docid", F.col("weight").alias("score")), q.boost)
-            if self.stats_mode == "joined" and self._supports_joined_stats(q.fieldname):
-                # single-job plan: idf from a 1-row broadcast join, no
-                # driver stats lookup (searching.py's idf cache subsumed)
-                tagg = self._term_stats_agg(q.fieldname, [q.text])
-                joined = p.join(F.broadcast(tagg), "term")
-                score = self.model.score_col_stats(
-                    self, q.fieldname, F.col("weight"), F.col("len_q"),
-                    F.col("df").cast("double"), F.col("cf"),
-                )
-                return boost(joined.select("docid", score.alias("score")), q.boost)
             st = stats.get((q.fieldname, q.text)) or self._cached_stats(
                 [(q.fieldname, q.text)]
             ).get((q.fieldname, q.text))
@@ -1214,7 +1126,6 @@ class Searcher:
             sub = Searcher(
                 self.index,
                 weighting=q.weighting if q.weighting is not None else self.model,
-                stats_mode=self.stats_mode,
             )
             return boost(sub.score_df(q.child), q.boost)
 
@@ -1473,25 +1384,15 @@ class Searcher:
             return None  # per-child compile turns each Term into empty
         scorable = self.index.config.field(fieldname).scorable
 
-        if not scorable or (
-            self.stats_mode == "joined" and self._supports_joined_stats(fieldname)
-        ):
-            # single-job plan: no driver stats lookup.  Membership/absence
+        if not scorable:
+            # WeightScorer: raw weights, no stats lookup.  Membership/absence
             # falls out of the scan itself (an absent term matches nothing,
             # so an And's count == n_children filter rejects every doc).
             texts = sorted({c.text for c in kids})
             p = self.index.postings_span(fieldname, terms=texts).where(
                 (F.col("field") == fieldname) & F.col("term").isin(texts)
             )
-            w, flq = F.col("weight"), F.col("len_q")
-            if not scorable:
-                base_score = w
-            else:
-                tagg = self._term_stats_agg(fieldname, texts)
-                p = p.join(F.broadcast(tagg), "term")
-                base_score = self.model.score_col_stats(
-                    self, fieldname, w, flq, F.col("df").cast("double"), F.col("cf")
-                )
+            base_score = F.col("weight")
             if any(c.boost != 1.0 for c in kids):
                 boost_map = F.create_map(
                     *[F.lit(x) for c in kids for x in (c.text, float(c.boost))]

@@ -3,8 +3,8 @@ Training Data Makes Language Models Better" — public): remove every
 repeated occurrence of any sufficiently long span, KEEPING the first,
 across the whole corpus.  This is the finest-grained member of the
 dedup family (document-level exact_duplicates, line-level
-remove_duplicate_lines, near-dup MinHash/SimHash, containment winnow
-— all in this repo); it catches the long quoted passage pasted into
+remove_duplicate_lines, near-dup MinHash/SimHash — all in this repo);
+it catches the long quoted passage pasted into
 thousands of otherwise-distinct pages.
 
 The published tool builds a corpus-wide suffix array on one large
@@ -14,8 +14,8 @@ a ``min_tokens`` of 50 changes nothing material) and never builds a
 global index:
 
 1. one Arrow pass per doc: tokenize, rolling ``min_tokens``-gram hash
-   over md5 token values (globally consistent across docs — the winnow
-   technique, vectorized);
+   over md5 token values (globally consistent across docs — the
+   winnowing technique of Schleimer et al. 2003, vectorized);
 2. explode (id, pos, hash); rank every occurrence of each hash by
    (id, pos) — rank 1 is the occurrence the corpus keeps (the
    paper's keep-one semantics); occurrences with rank > 1 mark their

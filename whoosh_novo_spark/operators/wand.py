@@ -199,33 +199,14 @@ def search_wand(
     multiterm: bool = False,
     force_kernel: bool = False,
 ) -> DataFrame:
-    """Plan-cached wrapper over the pruned top-k (see Searcher.search's
-    prepared-plan cache — same contract: plans only, never rows; cache
-    hits hand out a fresh Dataset so shuffle outputs are never reused)."""
-    from whoosh_novo_spark.operators.query import _fresh_dataframe
-
-    try:
-        key = ("wand", q, limit, n_buckets, multiterm, force_kernel)
-        hash(key)
-    except TypeError:
-        key = ("wand", repr(q), limit, n_buckets, multiterm, force_kernel)
-    cache = getattr(searcher, "_plan_cache", None)
-    if cache is not None:
-        got = cache.get(key)
-        if got is not None:
-            try:
-                return _fresh_dataframe(got)
-            except Exception:
-                cache.pop(key, None)
-    out = _search_wand(searcher, q, limit, n_buckets, multiterm, force_kernel)
-    if cache is not None:
-        try:
-            fresh = _fresh_dataframe(out)
-        except Exception:
-            return out
-        cache[key] = out
-        return fresh
-    return out
+    """Plan-cached wrapper over the pruned top-k (Searcher._cached_plan —
+    same cache and contract as Searcher.search: plans only, never rows;
+    cache hits hand out a fresh Dataset so shuffle outputs are never
+    reused)."""
+    return searcher._cached_plan(
+        ("wand", q, limit, n_buckets, multiterm, force_kernel),
+        lambda: _search_wand(searcher, q, limit, n_buckets, multiterm, force_kernel),
+    )
 
 
 def _search_wand(
