@@ -10,7 +10,8 @@ Legs:
   analyze    analyze stage with noop sink vs parquet write
   sortleg    posting sort leg: production shape vs narrow-shuffle shape
   queries    warm query profile: plan-build ms vs collect ms vs job count
-  wand       kernel (force_kernel) vs exact routing at several selectivities
+  wand       driver kernel vs Spark kernel (force_kernel) vs exact plan at
+             several selectivities
   batch      search_batch build/collect phases, cold and warm stats
 
 Usage: python bench_extra.py <leg> [repo_path]
@@ -178,6 +179,7 @@ def leg_queries() -> None:
 
 
 def leg_wand() -> None:
+    from whoosh_novo_spark.operators import wand
     from whoosh_novo_spark.operators.query import Index, Searcher
     from whoosh_novo_spark.operators.wand import search_wand
     from whoosh_novo_spark.plans import ast
@@ -188,16 +190,22 @@ def leg_wand() -> None:
     cfg = IndexConfig(id_col="url", fields=(FieldConfig("text"),), stored_cols=())
     s = Searcher(Index(spark, SegmentStore("/tmp/wns_bench_ix_synth"), cfg))
     T = lambda w: ast.Term("text", w)  # noqa: E731
+    # time the driver route past its bound too: where it crosses the
+    # exact plan is what DRIVER_KERNEL_MAX_POSTINGS is set from
+    wand.DRIVER_KERNEL_MAX_POSTINGS = float("inf")
     for words in (["render", "shade", "texture"],
                   ["w00050", "w00100", "w00200"],
                   ["w00500", "w01000", "w02000"]):
         q = ast.Or(tuple(T(w) for w in words))
         st = s._cached_stats([("text", w) for w in words])
         dfs = [st[("text", w)].df for w in words if ("text", w) in st]
+        files = s.index._local_pruned_files("blocks", {"fieldname": "text", "terms": words})
+        d = _med3(lambda q=q: wand._search_local(s, q, 10).collect())
         k = _med3(lambda q=q: search_wand(s, q, limit=10, n_buckets=32,
                                           force_kernel=True).collect())
         e = _med3(lambda q=q: s.search(q, limit=10).collect())
-        print(f"WAND {words} sum_df={sum(dfs)} kernel={k}ms exact={e}ms")
+        print(f"WAND {words} sum_df={sum(dfs)} files={len(files)} driver={d}ms kernel={k}ms "
+              f"exact={e}ms loadavg={os.getloadavg()[0]:.1f}")
     spark.stop()
 
 

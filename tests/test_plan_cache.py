@@ -71,19 +71,30 @@ def test_wand_cache_rank_identity(searcher):
         assert s1 == s2
 
 
-def test_wand_cost_route_below_cutoff(searcher):
-    """Default routing: a small-corpus disjunction is below the pruned
-    path's break-even posting volume, so search_wand plans the exact
-    aggregation (no Python-kernel nodes) — results identical."""
+def test_wand_cost_route_below_cutoff(spark, searcher):
+    """Default routing: a small-corpus disjunction is below the driver
+    kernel's posting bound, so search_wand answers it in-process — a
+    LocalTableScan that starts no Spark job — with the exact plan's
+    ranks and scores."""
     q = ast.Or((ast.Term("text", "render"), ast.Term("text", "shade")))
-    routed = search_wand(searcher, q, limit=10)
+    sc = spark.sparkContext
+    sc.setJobGroup("wand-route", "wand-route")
+    try:
+        routed = search_wand(searcher, q, limit=10)
+        got = _rows(routed)
+    finally:
+        sc.setJobGroup("idle", "idle")
+    assert list(sc.statusTracker().getJobIdsForGroup("wand-route")) == []
     plan = routed._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan
-    assert _rows(routed) == _rows(searcher.search(q, limit=10))
+    assert "LocalTableScan" in plan and "FlatMapGroupsInPandas" not in plan
+    exact = _rows(searcher.search(q, limit=10))
+    assert [d for d, _ in got] == [d for d, _ in exact]
+    for (_, a), (_, b) in zip(got, exact):
+        assert a == pytest.approx(b, rel=1e-12)
     forced = search_wand(searcher, q, limit=10, force_kernel=True)
     fplan = forced._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in fplan
-    assert [d for d, _ in _rows(forced)] == [d for d, _ in _rows(routed)]
+    assert [d for d, _ in _rows(forced)] == [d for d, _ in got]
 
 
 def test_lru_keeps_a_hot_plan(searcher):
@@ -107,7 +118,7 @@ def test_lru_keeps_a_hot_plan(searcher):
 def test_wand_plans_count_toward_the_bound(searcher):
     s = Searcher(searcher.index)
     q = ast.Or((ast.Term("text", "render"), ast.Term("text", "shade")))
-    search_wand(s, q, limit=10)  # below the cutoff: also plans search(q)
+    search_wand(s, q, limit=10, force_kernel=True)  # a cached Spark plan
     (wand_key,) = [k for k in s._plan_cache if k[0] == "wand"]
     filler = s.index.empty_scored()
     for i in range(PLAN_CACHE_SIZE):

@@ -199,6 +199,21 @@ class FederatedIndex(Index):
             df = df.join(self.tombstones(), "docid", "left_anti")
         return df
 
+    def _table_dirs(self, table: str) -> list[tuple[str, int]]:
+        """Every store's directories of ``table`` with the store's docid
+        offset — what the driver-local readers (``Index._local_files``)
+        list, so a federation's term stats and small block-max queries
+        stay in-process like a single store's."""
+        out = []
+        for store, man, shift in self._parts:
+            if table == "tombstones":
+                p = store.tombstones_dir(man)
+                dirs = [] if p is None else [p]
+            else:
+                dirs = store.table_paths(man, table)
+            out.extend((d, shift) for d in dirs)
+        return out
+
     # --- file-level (field, term) pruning --------------------------------
     # each store's range manifest prunes independently; survivors union
     # with their store's shift.  Any store without usable bounds makes the
@@ -217,6 +232,18 @@ class FederatedIndex(Index):
 
             cache[key] = segment_ranges(store, man.segments, table)
         return cache[key]
+
+    def _file_ranges(self, table: str):
+        """All stores' file spans, for the driver-local readers' pruning
+        (``Index._local_pruned_files``); the Spark scans prune per store
+        in ``_pruned_table``."""
+        out = []
+        for store, man, _shift in self._parts:
+            ranges = self._part_ranges(store, man, table)
+            if ranges is None:
+                return None  # pruning disabled
+            out.extend(ranges)
+        return out
 
     def _pruned_table(
         self,

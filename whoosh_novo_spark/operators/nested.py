@@ -148,11 +148,10 @@ def nested_parent(
     limit: int | None = 10,
 ) -> DataFrame:
     """NestedParent: (parent docid, combined score), ordered like search."""
-    spark = searcher.index.spark
     pdf = _parent_ids_df(searcher, parents)
     n_parents = pdf.count()
     if n_parents == 0:
-        return spark.createDataFrame([], "docid long, score double")
+        return searcher.index.empty_scored()
     matches = searcher.score_df(subq.normalize()).select("docid", "score")
     withp = _attach_parent(searcher, matches, pdf, n_parents).where(F.col("parent") >= 0)
     if per_parent_limit is not None:
@@ -186,11 +185,10 @@ def nested_children(
     """NestedChildren: child docs whose block parent matches
     ``wanted_parents``; score = boost (nested.py:261-300).  The wanted set
     stays distributed — a semi join on the attached parent column."""
-    spark = searcher.index.spark
     pdf = _parent_ids_df(searcher, all_parents)
     n_parents = pdf.count()
     if n_parents == 0:
-        return spark.createDataFrame([], "docid long, score double")
+        return searcher.index.empty_scored()
     wanted = searcher.score_df(wanted_parents.normalize()).select(
         F.col("docid").alias("parent")
     )

@@ -70,8 +70,7 @@ def phrase_with_slop(searcher, q: ast.Phrase, stats, ordered: bool = True) -> Da
     is the Sequence(ordered=False) relaxation (positional.py:36-122):
     position gaps may run in either direction."""
     ix = searcher.index
-    spark = ix.spark
-    empty = spark.createDataFrame([], "docid long, score double")
+    empty = ix.empty_scored()
     words = list(q.words)
     uniq = sorted(set(words))
     word_counts = {w: words.count(w) for w in uniq}
@@ -358,7 +357,7 @@ def span_search(searcher, fieldname: str, expr: SpanExpr, limit: int | None = 10
     stats = searcher._cached_stats([(fieldname, w) for w in uniq])
     present = [w for w in uniq if (fieldname, w) in stats]
     if not present:
-        return ix.spark.createDataFrame([], "docid long, score double")
+        return ix.empty_scored()
     p = ix.postings_span(fieldname, terms=present).where(
         (F.col("field") == fieldname) & F.col("term").isin(present)
     )
@@ -400,7 +399,7 @@ def spannear2(
     stats = searcher._cached_stats([(fieldname, w) for w in set(words)])
     ix = searcher.index
     if any(stats.get((fieldname, w)) is None for w in set(words)):
-        return ix.spark.createDataFrame([], "docid long, score double")
+        return ix.empty_scored()
     if ordered and mindist == 1:
         return phrase_with_slop(searcher, q, stats)
     # unordered / custom mindist variant: same plan, different kernel params

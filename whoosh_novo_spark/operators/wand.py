@@ -24,6 +24,21 @@ is rank-identical to the exact aggregation path (which remains the test
 oracle, tests/test_wand.py).  Tombstoned indexes stay on the pruned path:
 deleted docids are cogrouped into their buckets and filtered at candidate
 introduction (statistics keep counting deletes, like the exact path).
+
+Routes.  ``search_wand`` answers an unboosted Term / And / Or of one
+BM25F field with ``limit`` set on one of three routes, chosen by the
+present terms' total postings (Σdf, from the cached term stats):
+
+- below ``DRIVER_KERNEL_MAX_POSTINGS`` on local storage: the kernel runs
+  once on the driver over the single bucket [0, next_docid), fed by a
+  pyarrow read of the terms' block rows and the tombstones, and the top-k
+  comes back as a ``LocalTableScan`` — no Spark job at all;
+- below ``EXACT_PLAN_MAX_POSTINGS``: the exact JVM aggregation
+  (``Searcher.search``'s plan);
+- at or above it: the bucketed kernel as a Spark job (steps 1-3).
+
+Every route returns the same ranks and scores; ``force_kernel=True`` pins
+the Spark kernel and ``multiterm=True`` skips the driver route.
 """
 
 from __future__ import annotations
@@ -32,11 +47,38 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from whoosh_novo_spark.operators.blocks import decode_ids, decode_lens
+from whoosh_novo_spark.operators.query import scored_frame
 from whoosh_novo_spark.plans import ast
+
+
+# Route bounds over Σdf (see the module docstring).
+#
+# Driver kernel vs exact plan: the exact plan's floor is scheduling, not
+# data — two Spark jobs and three stages, 160-234 ms per 3-term
+# disjunction on 700- to 9,400-doc indexes, of which the scan job is
+# about 20 ms.  The numpy kernel over one 1M-doc bucket costs about
+# 0.4 µs per posting with little pruning on random data (27 / 116 / 436
+# / 967 ms at 41k / 300k / 1.2M / 2.1M postings), and the block read
+# about 1.8 ms per file.  ``bench_extra.py wand`` at the 1M-doc index
+# (65-71 block files per query): driver 178 / 378 / 2083 ms against
+# exact 218 / 438 / 1170 ms at Σdf 41k / 380k / 2.9M, so the routes
+# cross near 500k postings; the bound sits at half that, since the
+# per-posting cost grows where the kernel prunes less.
+DRIVER_KERNEL_MAX_POSTINGS = 250_000
+# Spark kernel vs exact plan (r6): the bucketed kernel pays a fixed
+# ~0.7-0.9 s of plan machinery (blocks scan + explode + cogroup shuffle
+# + per-bucket Python eval) before any pruning can help, while the exact
+# aggregation rides row-group pruning and whole-stage codegen.
+# Same-window medians at the 1M-doc index: kernel 0.84-1.4 s vs exact
+# 0.20-0.55 s at every selectivity (Σdf 41k..2.9M), and the r3 4M probe
+# still had the kernel behind, so the Spark kernel only runs where
+# skipped blocks can outweigh its fixed cost.
+EXACT_PLAN_MAX_POSTINGS = 5_000_000
 
 
 def _bm25(idf: float, w: np.ndarray, flq: np.ndarray, avgfl: float, B: float, K1: float):
@@ -199,14 +241,177 @@ def search_wand(
     multiterm: bool = False,
     force_kernel: bool = False,
 ) -> DataFrame:
-    """Plan-cached wrapper over the pruned top-k (Searcher._cached_plan —
-    same cache and contract as Searcher.search: plans only, never rows;
-    cache hits hand out a fresh Dataset so shuffle outputs are never
-    reused)."""
+    """Top-``limit`` (docid, score), ordered (score desc, docid asc) and
+    rank-identical to ``Searcher.search``, on one of three routes (see
+    the route bounds above).  A flat query small enough for the driver
+    kernel is answered in-process on every call and never enters the
+    plan cache; every other query goes through ``Searcher._cached_plan``
+    (same cache and contract as ``Searcher.search``: plans only, never
+    rows; cache hits hand out a fresh Dataset so shuffle outputs are
+    never reused)."""
+    if limit is not None and not (multiterm or force_kernel):
+        local = _search_local(searcher, q, limit)
+        if local is not None:
+            return local
     return searcher._cached_plan(
         ("wand", q, limit, n_buckets, multiterm, force_kernel),
         lambda: _search_wand(searcher, q, limit, n_buckets, multiterm, force_kernel),
     )
+
+
+def _flat_terms(qn: ast.Query) -> tuple[list[ast.Term], str] | None:
+    """(terms, "or" | "and") of a Term or an And/Or of Terms, else None."""
+    if isinstance(qn, ast.Term):
+        return [qn], "or"
+    if isinstance(qn, (ast.And, ast.Or)) and all(
+        isinstance(c, ast.Term) for c in qn.children
+    ):
+        return list(qn.children), "and" if isinstance(qn, ast.And) else "or"
+    return None
+
+
+def _kernel_fits(searcher, qn: ast.Query, terms: list[ast.Term]) -> bool:
+    """The kernel hard-codes unboosted single-field BM25 over block
+    metadata: other weighting models (its bound math is BM25's), a
+    segment without blocks (e.g. one store of a federation built by an
+    older writer: no skip pointers), Term or query boosts, minmatch
+    counting, unscorable fields (WeightScorer) and fields without
+    postings (undeclared, or typed docmap columns) all keep rank identity
+    with ``Searcher.search`` only on the exact plan."""
+    from whoosh_novo_spark.plans.weighting import BM25F
+
+    ix = searcher.index
+    fieldname = terms[0].fieldname
+    return (
+        searcher._known_field(fieldname)
+        and searcher._is_text_field(fieldname)
+        and isinstance(searcher.model, BM25F)
+        and all(s.has_blocks for s in ix.manifest.segments)
+        and all(t.boost == 1.0 for t in terms)
+        and getattr(qn, "boost", 1.0) == 1.0
+        and not (isinstance(qn, ast.Or) and (getattr(qn, "minmatch", 0) or 0) > 1)
+        and len({t.fieldname for t in terms}) == 1
+        and ix.config.field(fieldname).scorable
+    )
+
+
+def _kernel_params(searcher, present: list[ast.Term], stats, limit: int, mode: str) -> dict:
+    """The kernel's scoring constants for the present terms of one field:
+    BM25 B/K1/avgfl, per-term idf and whole-list max quality
+    (scoring.py:205-212: score(max_weight, min_length)), terms
+    rarest-first."""
+    ix = searcher.index
+    fieldname = present[0].fieldname
+    avgfl = ix.avg_field_length(fieldname)
+    B, K1 = searcher.model.field_b(fieldname), searcher.model.K1
+    st = {t.text: stats[(t.fieldname, t.text)] for t in present}
+    idf = {w: searcher.idf(s.df, fieldname) for w, s in st.items()}
+    mq = {
+        w: float(
+            _bm25(
+                idf[w], np.array([s.max_weight]), np.array([float(s.min_len_q)]),
+                avgfl, B, K1,
+            )[0]
+        )
+        for w, s in st.items()
+    }
+    return {
+        "k": limit, "mode": mode, "B": B, "K1": K1, "avgfl": float(avgfl),
+        "idf": idf, "mq": mq, "order": sorted(st, key=lambda w: st[w].df),
+    }
+
+
+_BLOCK_COLS = [
+    "term", "min_docid", "max_docid", "max_weight", "min_len_q", "ids", "weights", "lens",
+]
+
+
+def _local_blocks(
+    files: list[tuple[str, int]], fieldname: str, texts: list[str]
+) -> pd.DataFrame:
+    """The block rows of ``texts`` in ``fieldname`` from ``files``
+    ((path, docid_shift) pairs), read in-process with pyarrow — one
+    multi-file read per store offset, about 2.5x faster than a read per
+    file — with docids shifted by the store offset (FederatedIndex) the
+    way the Spark read shifts them."""
+    import pyarrow.parquet as pq
+
+    parts = []
+    for shift in sorted({sh for _, sh in files}):
+        t = pq.read_table(
+            [f for f, sh in files if sh == shift],
+            columns=_BLOCK_COLS,
+            filters=[("field", "==", fieldname), ("term", "in", texts)],
+            partitioning=None,  # a key=value dir in the store path is no column
+        )
+        if t.num_rows == 0:
+            continue
+        pdf = t.to_pandas()
+        if shift:
+            pdf["min_docid"] += shift
+            pdf["max_docid"] += shift
+        pdf["docid_shift"] = shift
+        parts.append(pdf)
+    if not parts:
+        return pd.DataFrame(columns=_BLOCK_COLS)
+    return pd.concat(parts, ignore_index=True)
+
+
+def _local_deleted(ix) -> np.ndarray | None:
+    """Sorted tombstoned docids (store offsets applied), read in-process;
+    None when the tombstone files are not local."""
+    import pyarrow.parquet as pq
+
+    files = ix._local_files("tombstones") if ix.manifest.has_tombstones else []
+    if files is None:
+        return None
+    ids = [
+        pq.read_table(f, columns=["docid"])["docid"].to_numpy().astype(np.int64) + shift
+        for f, shift in files
+    ]
+    return np.unique(np.concatenate(ids)) if ids else np.empty(0, np.int64)
+
+
+def _search_local(searcher, q: ast.Query, limit: int) -> DataFrame | None:
+    """The driver route: the kernel once over the single bucket
+    [0, next_docid) of blocks and tombstones read with pyarrow, the top-k
+    returned as a ``LocalTableScan`` — no Spark job.  None, for the
+    caller's Spark routes, unless the query fits the kernel, its blocks
+    and tombstones are on local storage and its present terms' Σdf is
+    below ``DRIVER_KERNEL_MAX_POSTINGS``."""
+    ix = searcher.index
+    qn = q.normalize()
+    flat = _flat_terms(qn)
+    if flat is None:
+        return None
+    terms, mode = flat
+    if not _kernel_fits(searcher, qn, terms):
+        return None
+    fieldname = terms[0].fieldname
+    stats = searcher._cached_stats([(t.fieldname, t.text) for t in terms])
+    present = [t for t in terms if (t.fieldname, t.text) in stats]
+    if not present or (mode == "and" and len(present) < len(terms)):
+        return ix.empty_scored()
+    texts = [t.text for t in present]
+    if sum(stats[(fieldname, w)].df for w in texts) >= DRIVER_KERNEL_MAX_POSTINGS:
+        return None
+    files = ix._local_pruned_files("blocks", {"fieldname": fieldname, "terms": texts})
+    if not files:
+        return None
+    try:
+        deleted = _local_deleted(ix)
+        if deleted is None:
+            return None
+        blocks = _local_blocks(files, fieldname, texts)
+    except (OSError, pa.ArrowException):  # unreadable file: Spark reads it
+        return None
+    params = _kernel_params(searcher, present, stats, limit, mode)
+    params["lo"], params["hi"] = 0, ix.manifest.next_docid
+    top = _bucket_kernel(blocks, params, deleted if len(deleted) else None)
+    ids = top["docid"].to_numpy(dtype=np.int64)
+    scores = top["score"].to_numpy(dtype=np.float64)
+    order = np.lexsort((ids, -scores))
+    return scored_frame(ix.spark, ids[order], scores[order])
 
 
 def _search_wand(
@@ -217,7 +422,8 @@ def _search_wand(
     multiterm: bool = False,
     force_kernel: bool = False,
 ) -> DataFrame:
-    """Pruned top-k for flat And/Or-of-Terms queries over the blocks table.
+    """The Spark routes for flat And/Or-of-Terms queries over the blocks
+    table: the exact plan, or the bucket kernel.
 
     Returns (docid, score) ordered (score desc, docid asc) limit k —
     rank-identical to ``Searcher.search``.
@@ -237,12 +443,9 @@ def _search_wand(
     spark = ix.spark
     qn = q.normalize()
     expanded_stats = None
-    if isinstance(qn, ast.Term):
-        terms, mode = [qn], "or"
-    elif isinstance(qn, ast.And) and all(isinstance(c, ast.Term) for c in qn.children):
-        terms, mode = list(qn.children), "and"
-    elif isinstance(qn, ast.Or) and all(isinstance(c, ast.Term) for c in qn.children):
-        terms, mode = list(qn.children), "or"
+    flat = _flat_terms(qn)
+    if flat is not None:
+        terms, mode = flat
     elif (
         multiterm
         and isinstance(qn, (ast.Prefix, ast.Wildcard, ast.Regex))
@@ -260,84 +463,30 @@ def _search_wand(
         except ValueError:
             return searcher.search(q, limit=limit)
         if not expansion:
-            return spark.createDataFrame([], "docid long, score double")
+            return ix.empty_scored()
         terms = [ast.Term(qn.fieldname, t) for t, _ in expansion]
         mode = "or"
         expanded_stats = {(qn.fieldname, t): st for t, st in expansion}
     else:
         return searcher.search(q, limit=limit)  # non-flat: exact path
 
-    from whoosh_novo_spark.plans.weighting import BM25F as _BM25F
-
-    if not isinstance(searcher.model, _BM25F):
-        # the numpy kernel hard-codes the BM25 bound math; other models
-        # use the exact path (pruning is an optimization, not semantics)
+    if not _kernel_fits(searcher, qn, terms):
         return searcher.search(q, limit=limit)
-
-    if not all(s.has_blocks for s in ix.manifest.segments):
-        # a segment without block metadata (e.g. one store of a
-        # federation built by an older writer) has no skip pointers to
-        # prune with — exact path keeps rank identity
-        return searcher.search(q, limit=limit)
-
     fieldname = terms[0].fieldname
-    if (
-        any(t.boost != 1.0 for t in terms)
-        or getattr(qn, "boost", 1.0) != 1.0
-        or (isinstance(qn, ast.Or) and getattr(qn, "minmatch", 0) and qn.minmatch > 1)
-        or len({t.fieldname for t in terms}) != 1
-        or not ix.config.field(fieldname).scorable
-    ):
-        # the kernel hard-codes unboosted single-field BM25 (no Term.boost,
-        # no minmatch counting, no WeightScorer for unscorable fields) —
-        # rank-identity with Searcher.search requires the exact path here
-        return searcher.search(q, limit=limit)
     pairs = [(t.fieldname, t.text) for t in terms]
     # a lexicon expansion already carries aggregated TermStats — reuse
     # them instead of a second terms-table lookup
     stats = expanded_stats if expanded_stats is not None else searcher._cached_stats(pairs)
     present = [t for t in terms if (t.fieldname, t.text) in stats]
     if not present or (mode == "and" and len(present) < len(terms)):
-        return spark.createDataFrame([], "docid long, score double")
+        return ix.empty_scored()
 
-    # Cost-based route (r6, guide §1.2 "choose the algorithm"): the
-    # bucket kernel pays a fixed ~0.7-0.9 s of plan machinery (blocks
-    # scan + explode + cogroup shuffle + per-bucket Python eval) before
-    # any pruning can help, while the exact JVM aggregation rides
-    # row-group pruning and whole-stage codegen.  Same-window medians at
-    # the 1M-doc index: kernel 0.84-1.4 s vs exact 0.20-0.55 s at every
-    # selectivity (sum_df 41k..2.9M), and the r3 4M probe still had the
-    # kernel behind.  The kernel only wins when the candidate volume is
-    # large enough that skipped blocks dominate its fixed cost, so below
-    # WNS_WAND_EXACT_CUTOFF total postings (default 5M) the planner
-    # chooses the rank-identical exact plan.  force_kernel=True pins the
-    # kernel (tests, plan dumps, calibration runs).
-    if not force_kernel:
-        import os as _os
+    if not force_kernel and (
+        sum(stats[(t.fieldname, t.text)].df for t in present) < EXACT_PLAN_MAX_POSTINGS
+    ):
+        return searcher.search(q, limit=limit)
 
-        cutoff = int(_os.environ.get("WNS_WAND_EXACT_CUTOFF", "5000000"))
-        if sum(stats[(t.fieldname, t.text)].df for t in present) < cutoff:
-            return searcher.search(q, limit=limit)
-
-    avgfl = ix.avg_field_length(fieldname)
-    B, K1 = searcher.model.field_b(fieldname), searcher.model.K1
-    idf = {
-        t.text: searcher.idf(stats[(t.fieldname, t.text)].df, t.fieldname)
-        for t in present
-    }
-    # whole-list max quality (scoring.py:205-212: score(max_weight, min_length))
-    mq = {
-        t.text: float(
-            _bm25(
-                idf[t.text],
-                np.array([stats[(t.fieldname, t.text)].max_weight]),
-                np.array([float(stats[(t.fieldname, t.text)].min_len_q)]),
-                avgfl, B, K1,
-            )[0]
-        )
-        for t in present
-    }
-    order = [t.text for t in sorted(present, key=lambda t: stats[(t.fieldname, t.text)].df)]
+    params_base = _kernel_params(searcher, present, stats, limit, mode)
 
     from whoosh_novo_spark.session import shuffle_partitions_of
 
@@ -357,11 +506,6 @@ def _search_wand(
             )
         ),
     )
-
-    params_base = {
-        "k": limit, "mode": mode, "B": B, "K1": K1, "avgfl": float(avgfl),
-        "idf": idf, "mq": mq, "order": order,
-    }
 
     if ix.manifest.has_tombstones:
         # tombstones are routed to their docid bucket and filtered inside
